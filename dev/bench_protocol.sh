@@ -1,6 +1,18 @@
 #!/usr/bin/env bash
-# Round-18 bench protocol = the r17 gated discipline with three
-# round-18 closures:
+# Gated bench protocol, one script for every round:
+#
+#   dev/bench_protocol.sh ROUND CONTROL_DIR CONTROL_LABEL
+#
+# ROUND names the artifact dir (dev/bench_r$ROUND); CONTROL_DIR is a
+# worktree of the same-window control commit, benched into the slot
+# bench_${CONTROL_LABEL}_samewindow. Round 19 ran it as
+# `dev/bench_protocol.sh 19 /tmp/r18head r18code` (control = the r18 end
+# commit 1615c9a), round 18 as `dev/bench_protocol.sh 18 /tmp/r17head
+# r17code` (control = the r17 judge commit c2cf405). The r14-r17 copies
+# under dev/bench_r1*/ run superseded gates and stay as history.
+#
+# Gate v2 FROZEN, shared dev/gate_accept.py, gated DuckDB legs, exit
+# propagation (the r18 closures):
 #   * ONE shared gate (dev/gate_accept.py — r17 ADVICE #4): the v2
 #     thresholds live in exactly one file, used by this script AND the
 #     scale protocol. GATE v2 IS FROZEN (r17 VERDICT #7): any future
@@ -24,7 +36,7 @@
 # Discipline unchanged from r17 (see dev/bench_r17/README.md for the
 # v2 amendment data): run1 = throwaway cold run; commit = median of >= 3
 # ACCEPTED warm runs; ratio vs duckdb median must be < 2.0; control =
-# the r17 judge commit (c2cf405) in worktree /tmp/r17head, benched in
+# the CONTROL_DIR worktree, benched in
 # the same window. Slots with accepted artifacts are skipped on
 # re-entry (resumable); reject numbering scans for the next free index
 # so a re-entry never clobbers a prior set's rejects.
@@ -33,17 +45,25 @@
 # bench_full.json — ./bench.json is written ONLY by this script's
 # commit gate (or an explicit SPARK_GRAFT_BENCH_OUT=./bench.json).
 set -uo pipefail
-cd "$(dirname "$0")/../.."
-OUT=dev/bench_r18
+if [[ $# -ne 3 ]]; then
+  echo "usage: $0 ROUND CONTROL_DIR CONTROL_LABEL" >&2; exit 2
+fi
+ROUND=$1
+cd "$(dirname "$0")/.."
+ROOT=$PWD
+# the sf0.1 tables, in the testdata dir next to the checkout
+SF_DIR=$(dirname "$ROOT")/testdata/sf0.1
+OUT=dev/bench_r$ROUND
 ORACLE_SQL=dev/scale_experiment_r14/oracle_sql.json
 PREFLIGHT_ST_MAX=165
 PREFLIGHT_MT_MAX=270
 MAX_ATTEMPTS=3
 JAR_GLOB="target/scala-2.13/tingdataetlspark_*.jar"
-CONTROL_DIR=/tmp/r17head
+CONTROL_DIR=$2
+CONTROL_LABEL=$3
 
 probe() { # one bare-JVM sentinel leg -> "st mt"
-  java -cp "$(ls $JAR_GLOB | head -1):/opt/spark/jars/*" \
+  java -cp "$(ls $JAR_GLOB | head -1):$SPARK_HOME/jars/*" \
     graft.SentinelProbe 32 2>/dev/null |
     python3 -c "import json,sys; d=json.load(sys.stdin); print(d['st_ms'], d['mt_ms'])"
 }
@@ -75,8 +95,8 @@ spark_run() { # gated full run: name dir -> writes $OUT/$name.json (+ _rejN)
   for att in $(seq 1 $MAX_ATTEMPTS); do
     wait_idle
     echo "== spark $name attempt $att ($(date +%H:%M:%S))"
-    (cd "$dir" && SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
-      SPARK_GRAFT_BENCH_OUT="/root/repo/$OUT/$name.json" \
+    (cd "$dir" && SPARK_GRAFT_SF_DIR="$SF_DIR" \
+      SPARK_GRAFT_BENCH_OUT="$ROOT/$OUT/$name.json" \
       sbt -batch "runMain graft.Bench" 2>&1 | grep -E '^\[bench\]' | tail -4)
     python3 -c "import json; d=json.load(open('$OUT/$name.json')); print(' ', round(d['value'],1), 's,', len(d['queries']), 'queries, failed:', d['failed'])"
     if python3 dev/gate_accept.py artifact "$OUT/$name.json"; then return 0; fi
@@ -95,7 +115,7 @@ duck_run() { # gated comparator leg: probe-bracketed, accepted iff both
     wait_idle
     echo "== duckdb $name attempt $att ($(date +%H:%M:%S))"
     read -r pre_st pre_mt <<< "$(probe)"
-    python3 dev/oracle_bench.py /root/testdata/sf0.1 "$ORACLE_SQL" > "$OUT/$name.json.tmp"
+    python3 dev/oracle_bench.py "$SF_DIR" "$ORACLE_SQL" > "$OUT/$name.json.tmp"
     read -r post_st post_mt <<< "$(probe)"
     python3 - "$OUT/$name.json.tmp" "$OUT/$name.json" "$pre_st" "$pre_mt" "$post_st" "$post_mt" <<'EOF'
 import json, sys
@@ -126,15 +146,15 @@ duck_run duckdb_run2
 spark_run bench_run3
 duck_run duckdb_run3
 spark_run bench_run4
-spark_run bench_r17code_samewindow "$CONTROL_DIR"
+spark_run "bench_${CONTROL_LABEL}_samewindow" "$CONTROL_DIR"
 
 # COMMIT GATE: median accepted warm run vs accepted-DuckDB median,
 # must be < 2.0. Exit status propagates (r17 ADVICE #3).
-python3 - <<'EOF' || exit 1
+python3 - <<EOF || exit 1
 import json, glob, re, statistics, shutil, subprocess, sys
 warm = []
 for n in ["bench_run2", "bench_run3", "bench_run4"]:
-    path = f"dev/bench_r18/{n}.json"
+    path = f"$OUT/{n}.json"
     ok = subprocess.run(
         [sys.executable, "dev/gate_accept.py", "artifact", path],
         capture_output=True, text=True)
@@ -143,7 +163,7 @@ for n in ["bench_run2", "bench_run3", "bench_run4"]:
     if ok.returncode == 0:
         warm.append((d["value"], n))
 ducks = []
-for f in sorted(glob.glob("dev/bench_r18/duckdb_run*.json")):
+for f in sorted(glob.glob("$OUT/duckdb_run*.json")):
     if re.search(r"_rej\d+\.json$", f):
         continue
     d = json.load(open(f))
@@ -163,7 +183,7 @@ print(f"median accepted warm = {med_val:.1f}s ({med_name}); duckdb median = {dme
 if ratio >= 2.0:
     print("GATE FAIL: ratio >= 2.0 — do not commit this sitting's bench.json")
     sys.exit(1)
-shutil.copy(f"dev/bench_r18/{med_name}.json", "bench.json")
+shutil.copy(f"$OUT/{med_name}.json", "bench.json")
 print(f"ACCEPTED: {med_name} -> bench.json (ratio {ratio:.3f}x < 2.0)")
 EOF
 echo "== protocol done (commit gate passed)"

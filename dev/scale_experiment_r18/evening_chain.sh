@@ -8,13 +8,13 @@ set -uo pipefail
 cd "$(dirname "$0")/../.."
 
 echo "== chain: waiting for bench protocol ($(date +%H:%M:%S))"
-while pgrep -f "dev/bench_r18/protocol.sh" >/dev/null; do sleep 60; done
+while pgrep -f "dev/bench_protocol.sh 18" >/dev/null; do sleep 60; done
 # The protocol is resumable and exits nonzero while slots are missing
 # (storm evenings can exhaust a slot's attempts); re-enter it until
 # the commit gate passes, bounded so a permanent storm still lets the
 # scale legs run inside this sitting.
 for reentry in 1 2 3 4; do
-  if dev/bench_r18/protocol.sh >> /tmp/bench18_protocol.log 2>&1; then
+  if dev/bench_protocol.sh 18 /tmp/r17head r17code >> /tmp/bench18_protocol.log 2>&1; then
     echo "== chain: bench protocol commit gate PASSED (re-entry $reentry)"
     break
   fi

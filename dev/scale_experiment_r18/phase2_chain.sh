@@ -23,7 +23,7 @@ PREFIX=grow3cold dev/scale_experiment_r18/run_spark.sh 100x_coldcache /tmp/scale
 
 echo "== chain: grow4 phase done ($(date +%H:%M:%S)), bench re-entries"
 for i in 1 2 3 4 5 6; do
-  if dev/bench_r18/protocol.sh >> /tmp/bench18_protocol.log 2>&1; then
+  if dev/bench_protocol.sh 18 /tmp/r17head r17code >> /tmp/bench18_protocol.log 2>&1; then
     echo "== chain: bench commit gate PASSED (re-entry $i, $(date +%H:%M:%S))"
     break
   fi

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-audit main: print the formatted physical plan of the named
   * queries (all queries when no args). Usage:
@@ -8,34 +7,14 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      // mirror the Bench/Verify sessions so plans shown here are the
-      // plans that actually run (incl. the TopKPerGroup rewrite)
-      // single registration mechanism (the conf — spark-submit parity);
-      // adding .withExtensions too would inject the optimizer rule and
-      // planner strategy twice (fresh JVM => the conf path is reliable)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // AQE off by default HERE (unlike Bench, which runs the adaptive
-      // production config): explain is a plan-shape audit, and the
-      // static plan shows operator structure without QueryStage /
-      // AQEShuffleRead wrappers; set SPARK_GRAFT_AQE=true to audit the
-      // adaptive shapes instead
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.build(Session.Role.Explain, "graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
-    val wanted = args.toSet
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => wanted.isEmpty || wanted(n) }
-      .foreach { case (name, fn) =>
+    QueryRun.run(spark, QueryRun.select(args.toSet, sfDir))(
+      act = { (name, build) =>
         println(s"\n========== $name ==========")
-        try fn(spark, sfDir).explain("formatted")
-        catch { case e: Throwable => println(s"EXPLAIN FAILED: ${e.getMessage}") }
-      }
+        build().explain("formatted")
+      },
+      failed = (_, e) => println(s"EXPLAIN FAILED: ${e.getMessage}"))
     spark.stop()
   }
 }

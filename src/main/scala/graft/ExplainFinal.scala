@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Post-execution plan-audit main: EXECUTE the named queries and print
   * the FINAL adaptive physical plan — what AQE actually ran, not the
@@ -27,58 +26,29 @@ import org.apache.spark.sql.SparkSession
 object ExplainFinal {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the production configuration under test: AQE ON, default
-      // broadcast threshold — the guard must hold with zero overrides
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_JARS").foreach(builder.config("spark.jars", _))
-    ExtraConf(builder)
-    val spark = builder.getOrCreate()
+    val spark = Session.build(Session.Role.ExplainFinal, "graft-explain-final")
     spark.sparkContext.setLogLevel("WARN")
     val wanted = args.toSet
     // `_ppjoin_plan`: the t52 join tree DIRECTLY via the lazy
     // ppJoinPairsPlan seam — the registry's t52 routes through the
     // shared-artifact contract, so its own plan is just a parquet scan
     // of the materialized pair table and the guarded verify joins are
-    // invisible to a plan dump of the entry
-    val seamEntries: Seq[(String, org.apache.spark.sql.SparkSession => (org.apache.spark.sql.DataFrame, () => Unit))] =
-      if (wanted.contains("_ppjoin_plan")) Seq("_ppjoin_plan" -> { s: org.apache.spark.sql.SparkSession =>
-        // the registry's EXACT input via the shared builder (r16
-        // verdict #3) — the drilled plan is the shipped plan
-        val base = graft.queries.TextQueries.ppJoinBase(s, sfDir)
-        graft.etl.Dedup.ppJoinPairsPlan(base, "doc_id", "toks", 4, 5)
-      })
-      else Seq.empty
-    val entries: Seq[(String, org.apache.spark.sql.SparkSession => (org.apache.spark.sql.DataFrame, () => Unit))] =
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (n, _) => wanted.isEmpty || wanted(n) }
-        .map { case (n, fn) =>
-          n -> { s: org.apache.spark.sql.SparkSession =>
-            (fn(s, sfDir), () => ())
-          }
-        } ++ seamEntries
-    entries.foreach { case (name, mk) =>
-      println(s"\n========== $name ==========")
-      try {
-        val (df, release) = mk(spark)
-        try {
-          val qe = df.queryExecution
-          val rows = qe.executedPlan.execute().count()
-          println(s"rows: $rows")
-          println(qe.executedPlan.toString)
-        } finally release()
-      } catch { case e: Throwable =>
-        println(s"EXPLAIN-FINAL FAILED: ${e.getMessage}")
-      }
-    }
+    // invisible to a plan dump of the entry. The registry's EXACT input
+    // via the shared builder (r16 verdict #3) — the drilled plan is the
+    // shipped plan; the loop calls the seam's release hook.
+    val seam = QueryRun.Entry("_ppjoin_plan", s => graft.etl.Dedup.ppJoinPairsPlan(
+      graft.queries.TextQueries.ppJoinBase(s, sfDir), "doc_id", "toks", 4, 5))
+    val entries = QueryRun.select(wanted, sfDir) ++
+      Seq(seam).filter(e => wanted(e.name))
+    QueryRun.run(spark, entries)(
+      act = { (name, build) =>
+        println(s"\n========== $name ==========")
+        val qe = build().queryExecution
+        val rows = qe.executedPlan.execute().count()
+        println(s"rows: $rows")
+        println(qe.executedPlan.toString)
+      },
+      failed = (_, e) => println(s"EXPLAIN-FINAL FAILED: ${e.getMessage}"))
     spark.stop()
   }
 }

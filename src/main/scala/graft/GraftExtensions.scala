@@ -11,13 +11,8 @@ import graft.functions.{DotProduct, Md5Prefix60}
   * works next to the Column API, and the whole-operator extension
   * ([[graft.plans.TopKPerGroup]]: optimizer rule + planner strategy +
   * physical heap top-k replacing the row_number window pattern).
-  * Enable with
-  *
-  *   SparkSession.builder()
-  *     .withExtensions(new GraftExtensions)          // programmatic, or
-  *     .config("spark.sql.extensions", "graft.GraftExtensions")
-  *
-  * This is the standard extension seam — no Spark fork, works on any
+  * [[graft.Session]] registers it for every main, through the session
+  * conf — the standard extension seam: no Spark fork, works on any
   * cluster that can see the graft jar.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -37,21 +36,13 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Session.cpus(Session.Role.StreamBench)
     val nBatches = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "10").toInt
     val replicas = sys.env.getOrElse("SPARK_GRAFT_STREAM_REPLICAS", "4").toInt
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     // SPARK_GRAFT_STATE_STORE=rocksdb runs the same workload on the
     // disk-backed store (the 100 TB state configuration); the store
     // name lands in each variant's JSON line
-    ExtraConf.stateStore(builder)
-    ExtraConf(builder)
-    val spark = builder.getOrCreate()
+    val spark = Session.build(Session.Role.StreamBench, "graft-stream-bench")
     // label from the session's FINAL providerClass conf, so an
     // EXTRA_CONF providerClass override can't desync label and store
     val stateStore = ExtraConf.activeStateStore(spark)
@@ -116,8 +107,7 @@ object StreamBench {
       // host-noise sentinel pair per variant (the r15 212 s / r16 170 s
       // stream-control anomalies each burned a re-run to attribute to
       // window noise; now the label is on the artifact)
-      val sen0 = HostSentinel.measure(
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+      val sen0 = HostSentinel.measure(cpus)
       val t0 = System.nanoTime()
       batches.zipWithIndex.foreach { case (b, i) =>
         val ts = baseUs + i * 60L * 1000000L
@@ -145,8 +135,7 @@ object StreamBench {
         }
       }
       val total = (System.nanoTime() - t0) / 1e9
-      val sen1 = HostSentinel.measure(
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+      val sen1 = HostSentinel.measure(cpus)
       q.stop()
       // bench checkpoints are throwaway — reclaim the temp dir
       deleteRecursively(new java.io.File(ckpt))
@@ -161,8 +150,7 @@ object StreamBench {
           .map { case (k, v) => s"\"" + k + "\":" + v }
           .mkString("{", ",", "}")},""" +
         f""""watermark_lag_sec":$wmLagSec%.1f,""" +
-        s""""host_sentinel":${HostSentinel.json(sen0, sen1,
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)},""" +
+        s""""host_sentinel":${HostSentinel.json(sen0, sen1, cpus)},""" +
         f""""sf":"$sfDir"}""")
     }
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,59 +9,13 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // optional extra args: restrict the dump to the named queries
     val wanted = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER overrides the master URL — the cluster-topology
-    // smoke seam: `local-cluster[2,4,4096]` runs REAL separate-JVM
-    // executors (real serialization, real broadcasts), the cheapest way
-    // to catch closure-capture/encoder bugs local mode structurally
-    // hides. Executor JVMs need the graft classes: pass the `sbt
-    // package` jar via SPARK_GRAFT_JARS (see dev/local_cluster_verify.sh).
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // single registration mechanism (the conf — spark-submit parity);
-      // adding .withExtensions too would inject the optimizer rule and
-      // planner strategy twice (fresh JVM => the conf path is reliable)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      // Plan parity with the Bench session (r18 ADVICE #4): the oracle
-      // check must exercise the SAME physical plans the bench certifies
-      // — the AQE SMJ→SHJ rewrite (one shared threshold definition, env
-      // seam included, plus the advisory<=threshold pin — see
-      // Bench.shjThresholdBytes) and the 64 MB broadcast threshold.
-      // Join strategy never changes results, but with these mirrored
-      // the 205-entry DuckDB check verifies the executed plans
-      // directly instead of resting on that equivalence argument.
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        Bench.shjThresholdBytes.toString)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        math.min(Bench.shjThresholdBytes, 64L * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_JARS").foreach(builder.config("spark.jars", _))
-    // generic experiment seam: semicolon-separated k=v Spark confs
-    ExtraConf(builder)
-    val spark = builder.getOrCreate()
+    val spark = Session.build(Session.Role.Verify, "graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    val outcomes = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => wanted.isEmpty || wanted(name) }
-      .map { case (name, fn) =>
-      val ok =
-        try {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-          true
-        } catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-          false
-        }
-      // free per-query persisted/checkpointed data between queries
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      (name, ok)
-    }
+    val outcomes = QueryRun.run(spark, QueryRun.select(wanted, sfDir))(
+      act = (name, build) =>
+        build().coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"),
+      failed = (name, e) => System.err.println(s"[verify] $name failed: ${e.getMessage}"))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -80,7 +33,7 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Durable run summary (file, not just stderr): which dumps succeeded.
     // A driver that only tails the log can read this instead.
-    val summary = outcomes.map { case (n, ok) => s"${q(n)}: $ok" }
+    val summary = outcomes.map { case (n, ok) => s"${q(n)}: ${ok.isDefined}" }
       .mkString("{\"dumped\": {", ",", "}}")
     Files.writeString(Paths.get(s"$outDir/verify.json"), summary + "\n")
     spark.stop()

@@ -48,21 +48,10 @@ private[cli] object Args {
   def srcBase(fileName: String): String =
     fileName.replaceAll("(?i)\\.csv$", "")
 
-  /** Local session for CLI runs; under spark-submit the provided master
-    * wins (builder config is a no-op when a session already exists).
+  /** The CLI session ([[graft.Session.Role.Cli]]): under spark-submit
+    * the provided master wins.
     */
-  def session(app: String): SparkSession = {
-    val b = SparkSession.builder().appName(app)
-      .config("spark.sql.session.timeZone", "UTC")
-      // single registration mechanism (the conf — spark-submit parity);
-      // adding .withExtensions too would inject the rule/strategy twice
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-    if (!sys.props.contains("spark.master"))
-      b.master("local[*]").config("spark.sql.shuffle.partitions",
-        Runtime.getRuntime.availableProcessors().toString)
-    b.getOrCreate()
-  }
+  def session(app: String): SparkSession = graft.Session.build(graft.Session.Role.Cli, app)
 
   /** All-string whole-file CSV read (`pd.read_csv(dtype=str)`,
     * aggregate_by_store.py:123 etc.): header row taken as-is,

@@ -146,6 +146,7 @@ object Bpe {
   def trainLocal(hist: Seq[(String, Long)],
                  rounds: Int): Seq[(Int, String, String, Long)] = {
     require(rounds >= 1, s"BPE training needs at least 1 round, got $rounds")
+    hist.foreach { case (w, c) => requireCount(w, c) }
     // duplicate words contribute additively, exactly as train's sum
     val cnt: Map[String, Long] = hist.groupMapReduce(_._1)(_._2)(_ + _)
     // INCREMENTAL pair maintenance (r19, the HF-tokenizers/SentencePiece
@@ -277,8 +278,20 @@ object Bpe {
         "distributed instead (Bpe.trainToVocab / Bpe.train keep the " +
         "histogram on the cluster), or pre-cap the vocabulary " +
         "(frequency floor / top-k) before collecting.")
-    rows.map(r => (r.getString(0), r.getLong(1))).toSeq
+    rows.map { r =>
+      val w = r.getString(0)
+      require(!r.isNullAt(1), s"word histogram count for '$w' is null")
+      requireCount(w, r.getLong(1))
+      (w, r.getLong(1))
+    }.toSeq
   }
+
+  /** Histogram counts must be positive: a zero or negative count breaks
+    * [[trainLocal]]'s zero-removal invariant on the maintained pair map
+    * and would surface rounds later as an opaque NoSuchElementException.
+    */
+  private def requireCount(w: String, c: Long): Unit =
+    require(c > 0, s"word histogram count for '$w' must be > 0, got $c")
 
   /** Unsigned UTF-8 byte comparison — Spark's UTF8String binary order
     * and DuckDB's default VARCHAR collation, which Java's String

@@ -335,4 +335,23 @@ class BpePropertySpec extends SparkSpec {
     assert(e.getMessage.contains("trainToVocab"))
     assert(e.getMessage.contains("NOT driver-sized"))
   }
+
+  test("a zero or negative histogram count is rejected up front, naming " +
+    "the word, by trainLocal and collectHistogram") {
+    import spark.implicits._
+    // unchecked, such a count breaks the maintained pair map's
+    // zero-removal invariant and surfaces rounds later as an opaque
+    // NoSuchElementException
+    for (bad <- Seq(0L, -2L)) {
+      val hist = Seq(("abcd", 5L), ("bcd", bad), ("cd", 1L))
+      val e = intercept[IllegalArgumentException](Bpe.trainLocal(hist, 3))
+      assert(e.getMessage.contains("'bcd'") && e.getMessage.contains(s"$bad"),
+        e.getMessage)
+      val c = intercept[IllegalArgumentException](
+        Bpe.collectHistogram(hist.toDF("w", "cnt")))
+      assert(c.getMessage.contains("'bcd'"), c.getMessage)
+    }
+    // positive counts still train
+    assert(Bpe.trainLocal(Seq(("abcd", 5L), ("bcd", 1L)), 3).nonEmpty)
+  }
 }

@@ -2,24 +2,21 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The SPARK_GRAFT_EXTRA_CONF parser shared by every main: blank
+/** The SPARK_GRAFT_EXTRA_CONF parser behind every session: blank
   * segments skip, missing '=' fails loudly (the r13 advice item — the
   * old inline `val Array(k, v) = ...` threw an opaque MatchError), and
   * the state-store seam resolves provider names.
   */
 class ExtraConfSpec extends AnyFunSuite {
 
-  // the builder's options map is private; the contracts worth pinning
-  // are parse-tolerance (no-throw) and the loud failure message
-  private def parsed(v: String): Unit =
-    ExtraConf(org.apache.spark.sql.SparkSession.builder(),
-      Map("SPARK_GRAFT_EXTRA_CONF" -> v))
+  private def parsed(v: String): Seq[(String, String)] =
+    ExtraConf(Map("SPARK_GRAFT_EXTRA_CONF" -> v))
 
   test("blank segments from doubled/trailing semicolons are skipped") {
     // must not throw (the old parser MatchError'd on the empty segment)
-    parsed("a=1;;b=2;")
-    parsed(";")
-    parsed("")
+    assert(parsed("a=1;;b=2;") == Seq("a" -> "1", "b" -> "2"))
+    assert(parsed(";").isEmpty)
+    assert(parsed("").isEmpty)
   }
 
   test("a segment without '=' fails with an explicit message") {
@@ -29,7 +26,7 @@ class ExtraConfSpec extends AnyFunSuite {
   }
 
   test("values may themselves contain '=' (split at the first only)") {
-    parsed("spark.x.y=k=v") // k=v value — must parse, not error
+    assert(parsed("spark.x.y=k=v") == Seq("spark.x.y" -> "k=v"))
   }
 
   test("empty key ('=v') and empty value ('a=') fail loudly") {
@@ -40,17 +37,17 @@ class ExtraConfSpec extends AnyFunSuite {
   }
 
   test("state-store seam: rocksdb selects the RocksDB provider, default is hdfs") {
-    val b = org.apache.spark.sql.SparkSession.builder()
-    assert(ExtraConf.stateStore(b, Map.empty) == "hdfs")
-    assert(ExtraConf.stateStore(b,
-      Map("SPARK_GRAFT_STATE_STORE" -> "rocksdb")) == "rocksdb")
-    assert(ExtraConf.stateStore(b,
-      Map("SPARK_GRAFT_STATE_STORE" -> "ROCKSDB")) == "rocksdb")
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    // hdfs is Spark's default provider: nothing to set
+    assert(ExtraConf.stateStore(Map.empty).isEmpty)
+    assert(ExtraConf.stateStore(Map("SPARK_GRAFT_STATE_STORE" -> "hdfs")).isEmpty)
+    for (v <- Seq("rocksdb", "ROCKSDB"))
+      assert(ExtraConf.stateStore(Map("SPARK_GRAFT_STATE_STORE" -> v))(provider)
+        .endsWith("RocksDBStateStoreProvider"), v)
   }
 
   test("state-store seam: a typo fails loudly instead of mislabeling") {
-    val b = org.apache.spark.sql.SparkSession.builder()
-    val e = intercept[RuntimeException](ExtraConf.stateStore(b,
+    val e = intercept[RuntimeException](ExtraConf.stateStore(
       Map("SPARK_GRAFT_STATE_STORE" -> "rocksbd")))
     assert(e.getMessage.contains("rocksbd"))
   }

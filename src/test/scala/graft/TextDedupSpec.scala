@@ -195,12 +195,16 @@ class TextDedupSpec extends SparkSpec {
       (id, Seq.fill(n)(f"${('a' + rnd.nextInt(6)).toChar}x${('a' + rnd.nextInt(6)).toChar}").distinct)
     }
     // exact duplicates of two random docs guarantee survivors at 0.9
-    val docs = (rows ++ Seq((41L, rows(4)._2), (42L, rows(17)._2)))
+    val strings = (rows ++ Seq((41L, rows(4)._2), (42L, rows(17)._2)))
       .toDF("doc_id", "sh")
-    val cand = docs.as("x").join(docs.as("y"),
+    // the packed-long leg runs the sorted merge-scan kernel, the string
+    // leg the hash-set kernel (every shingle is 3 chars: packChar3-able)
+    val packed = strings.select(col("doc_id"),
+      transform(col("sh"), Portable.packChar3(_)).as("sh"))
+    val cand = strings.as("x").join(strings.as("y"),
         col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-    for (thr <- Seq(0.0, 0.3, 0.6, 0.9)) {
+    for (docs <- Seq(strings, packed); thr <- Seq(0.0, 0.3, 0.6, 0.9)) {
       val got = Dedup.verifyJaccard(docs, "doc_id", "sh", cand, thr)
         .orderBy("doc_a", "doc_b").collect().toSeq
       // unfiltered reference: the declared semantics, no prefilter
@@ -211,8 +215,9 @@ class TextDedupSpec extends SparkSpec {
           round(Portable.jaccard(col("_ra"), col("_rb")), 6).as("jaccard"))
         .filter(col("jaccard") >= thr)
         .orderBy("doc_a", "doc_b").collect().toSeq
-      assert(got == ref, s"prefilter changed output at threshold $thr")
-      assert(ref.nonEmpty, s"degenerate fixture at threshold $thr")
+      val leg = docs.schema("sh").dataType.simpleString
+      assert(got == ref, s"prefilter changed output at threshold $thr on $leg")
+      assert(ref.nonEmpty, s"degenerate fixture at threshold $thr on $leg")
     }
   }
 

@@ -13,35 +13,6 @@ import org.apache.spark.sql.functions._
   */
 class TopKPlanSpec extends SparkSpec {
 
-  /** A session with GraftExtensions applied (the ExtensionsSpec recipe —
-    * the shared suite session is extension-free).
-    */
-  private def withExtSession[A](f: SparkSession => A): A = {
-    def fresh(attempts: Int): SparkSession = {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      val c = SparkSession.builder()
-        .master("local[4]")
-        .appName("graft-topk-test")
-        .config("spark.sql.shuffle.partitions", 4)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.extensions", "graft.GraftExtensions")
-        .withExtensions(new GraftExtensions().apply(_))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      if (c.sessionState.planner.strategies.exists(
-          _ == graft.plans.TopKPerGroupStrategy)) c
-      else if (attempts <= 1) fail("no session with GraftExtensions")
-      else fresh(attempts - 1)
-    }
-    val s = fresh(5)
-    try f(s)
-    finally {
-      SparkSession.setActiveSession(spark)
-      SparkSession.setDefaultSession(spark)
-    }
-  }
-
   /** Materialized physical plan as text (the extension must work WITH
     * AQE on, whose QueryStage wrappers are leaf nodes — collect first,
     * then render the final adaptive plan; string matching sees through
