@@ -169,6 +169,7 @@ object VerifyFanoutMain {
       .filter(col("_r") <= 10)
       .orderBy(col("kind"), col(key), col("src")).collect()
       .foreach(r => println(s"  ${r.getString(1)}: store=${r.getString(0)} file=${r.getString(2)}.csv"))
+    setProblems.unpersist()
 
     // pass 2 — content invariant per source file (distributed read-back;
     // membership test on the driver-side listing, no Spark job per file).
@@ -258,12 +259,7 @@ object AggregateMain {
         case k => throw new IllegalArgumentException(s"Config '$k' not found")
       }
     }
-    // persist: the store count and the fan-out write would otherwise each
-    // run the full normalization+aggregation pipeline from the scan
-    result.persist()
-    val nStores = result.select(keyCol).distinct().count()
-    FanOut.write(result, keyCol, outDir, cfgKey, bom = true)
-    result.unpersist()
+    val nStores = FanOut.write(result, keyCol, outDir, cfgKey, bom = true)
     println(s"[OK] config=$cfgKey, stores=$nStores")
     spark.stop()
   }

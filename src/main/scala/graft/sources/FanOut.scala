@@ -1,26 +1,38 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import java.nio.charset.{Charset, CharacterCodingException, CodingErrorAction, StandardCharsets}
+
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Partitioned fan-out sink (reference fan_out_by_storeid.py:36–48;
   * SURVEY.md §2.1 S5/S6): split rows of each source into
   * `out/{key}/{srcName}.csv`, optionally replaying meta prefix rows and a
   * UTF-8 BOM (`utf-8-sig`) at the top of every output file.
   *
-  * The heavy lifting is Spark's dynamic-partition CSV write — one writer
-  * per (task, key), iterator-based, constant memory (the reference's
-  * explicit O(1)-rows constraint is free here, SURVEY.md §4). The exact
-  * `{key}/{src}.csv` layout the reference promises is restored by a
-  * finalize pass whose DRIVER work is metadata-only: single-part keys
-  * with no prefix/BOM are `FileSystem.rename`d, and any byte-level
-  * concat (multi-part keys, prefix/BOM replay) runs distributed, one
-  * task per key — at 100 TB the finalize scales with the cluster.
+  * One job does the whole write. Each row is rendered to its CSV line by
+  * Spark's own `to_csv` and tagged with `monotonically_increasing_id()`;
+  * the rows are then hash-partitioned by key and sorted by (key, id), so
+  * every key lands in exactly one task with its rows in input order. The
+  * task walks its rows once, streaming each key into one file: prefix and
+  * BOM, header, rows — constant memory, the reference's O(1)-rows
+  * contract (SURVEY.md §4). Driver work is one `mkdirs` and one `delete`.
+  *
+  * Each output file is created exactly once, and never through the
+  * checksummed local filesystem: Hadoop's local FS without `libhadoop`
+  * forks a `chmod` process for every permissioned create (twice under
+  * `LocalFileSystem`: data file and `.crc` sidecar), and at the
+  * reference's file sizes those forks, not the rows, would dominate the
+  * cost of every extra create per key.
   */
 object FanOut {
 
-  /** Fan out `df` by `keyCol` into `outDir/{key}/{srcName}.csv`.
+  /** Fan out `df` by `keyCol` into `outDir/{key}/{srcName}.csv`; returns
+    * the number of keys written.
     *
     * Blank/whitespace keys are dropped (fan_out_by_storeid.py:35–37).
     * `prefixRows` (meta rows from [[HeaderScan]]) and `bom` reproduce the
@@ -40,6 +52,13 @@ object FanOut {
     * COVERAGE.md). Pass `encoding = "big5", lineSep = "\r\n"` for
     * byte-identical reference output (FanOutSpec pins it). `bom` is
     * the utf-8-sig marker and therefore requires UTF-8 output.
+    *
+    * Retry-safe: each (task attempt, key) streams into its own temp file
+    * under `outDir/_staging_{srcName}` and commits it by rename after the
+    * key's last row, so a retried or speculative attempt never
+    * interleaves bytes with another — the last rename wins whole-file.
+    * Orphaned temps go with the staging directory, which the driver
+    * deletes once the job has returned.
     */
   def write(
       df: DataFrame,
@@ -49,37 +68,52 @@ object FanOut {
       prefixRows: Seq[String] = Nil,
       bom: Boolean = false,
       encoding: String = "UTF-8",
-      lineSep: String = "\n"): Unit = {
+      lineSep: String = "\n"): Long = {
     val spark = df.sparkSession
-    val staging = s"$outDir/_staging_$srcName"
-    // reserved partition-helper name: a source column literally named
-    // _gk would be silently overwritten and then stripped from the CSVs
-    // by partitionBy — refuse it (schemas are arbitrary BI exports, so
-    // this is an input-validation contract, not an internal invariant)
-    require(!df.columns.contains("_gk"),
-      "FanOut.write reserves column _gk; rename the conflicting input column")
+    require(!bom || Charset.forName(encoding) == StandardCharsets.UTF_8,
+      s"bom (utf-8-sig) requires UTF-8 output, got $encoding")
     val cleaned = df
       .withColumn(keyCol, trim(col(keyCol)))
       .filter(col(keyCol).isNotNull && col(keyCol) =!= "")
-    // Partition on a duplicated helper column so the key stays in the CSV
-    // row content (Spark drops partition columns from files; the reference
-    // keeps the key cell — that's the invariant verify_fanout checks).
-    val helper = "_gk"
-    require(!bom || java.nio.charset.Charset.forName(encoding) ==
-      java.nio.charset.StandardCharsets.UTF_8,
-      s"bom (utf-8-sig) requires UTF-8 output, got $encoding")
-    // staging is ALWAYS UTF-8 + LF: Spark 4's CSV writer whitelists
-    // charsets (big5 is rejected without a legacy flag) and caps the
-    // write-side lineSep at one char, so non-default output encodings
-    // are produced by the DISTRIBUTED finalize pass transcoding the
-    // staging bytes (one task per key — same scale shape as the concat)
-    cleaned.withColumn(helper, col(keyCol)).write
-      .mode("overwrite")
-      .option("header", true)
-      .partitionBy(helper)
-      .csv(staging)
-    finalizeLayout(spark, staging, outDir, helper, srcName, prefixRows, bom,
-      encoding, lineSep)
+    val head = (if (bom) "\uFEFF" else "") + prefixRows.map(_ + lineSep).mkString +
+      csvHeader(cleaned.schema, spark.conf.get("spark.sql.session.timeZone")) + lineSep
+    // the id is taken BEFORE the shuffle, so sorting by it restores the
+    // input order of each key's rows; hash partitioning keeps every key
+    // in one task (AQE only coalesces such partitions, never splits them)
+    val rows = cleaned
+      .select(col(keyCol).as("k"), to_csv(struct(col("*"))).as("line"),
+        monotonically_increasing_id().as("id"))
+      .repartition(col("k"))
+      .sortWithinPartitions("k", "id")
+      .select("k", "line")
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(outDir).getFileSystem(hconf)
+    val staging = new Path(s"$outDir/_staging_$srcName")
+    // also creates outDir, so an input without a single keyed row still
+    // leaves the (empty) layout root the verifier lists
+    fs.mkdirs(staging)
+    val bconf = spark.sparkContext.broadcast(new SerializableHadoopConf(hconf))
+    try {
+      rows.rdd.mapPartitions { it =>
+        Iterator(writeKeys(bconf.value.value, outDir, srcName, head, encoding, lineSep,
+          it.map(r => (r.getString(0), r.getString(1)))))
+      }.collect().sum
+    } finally {
+      fs.delete(staging, true)
+      bconf.destroy()
+    }
+  }
+
+  /** The header line `df.write.option("header", true).csv` writes for
+    * `schema` (same generator, same options), without its terminator.
+    */
+  private def csvHeader(schema: StructType, timeZone: String): String = {
+    val options = new CSVOptions(Map("header" -> "true"), false, timeZone)
+    val w = new java.io.CharArrayWriter
+    val gen = new UnivocityGenerator(schema, w, options)
+    gen.writeHeaders()
+    gen.flush()
+    w.toString.stripSuffix(options.lineSeparatorInWrite.getOrElse("\n"))
   }
 
   /** Hadoop `Configuration` isn't `java.io.Serializable`; it IS a Hadoop
@@ -99,109 +133,24 @@ object FanOut {
     }
   }
 
-  /** One key's concat work item: (key, part-file paths). */
-  private type KeyParts = (String, Seq[String])
-
-  /** Move `staging/{key}={v}/part-*.csv` → `outDir/{v}/{srcName}.csv`.
-    *
-    * Scale contract: the driver touches METADATA only (listings, renames).
-    *   - single part file, no prefix/BOM → `FileSystem.rename` (a true
-    *     metadata op — the common case, since each key's rows land in few
-    *     tasks);
-    *   - multi-part or prefix/BOM → the byte concat runs DISTRIBUTED, one
-    *     task per key over a parallelized key list. At 100× data the
-    *     concat cost scales with the cluster, not with one driver thread.
+  /** Task side: stream one partition's (key, line) rows — sorted by key —
+    * into one committed file per key; returns the number of keys. Runs
+    * on executors — keep driver state out of here.
     */
-  private def finalizeLayout(
-      spark: SparkSession,
-      staging: String,
-      outDir: String,
-      keyCol: String,
-      srcName: String,
-      prefixRows: Seq[String],
-      bom: Boolean,
-      encoding: String,
-      lineSep: String): Unit = {
-    val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prefix = (if (bom) "﻿" else "") +
-      (if (prefixRows.nonEmpty) prefixRows.mkString("", lineSep, lineSep)
-       else "")
-    val plan: Array[KeyParts] = fs.listStatus(new Path(staging))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$keyCol="))
-      .map { partDir =>
-        // Spark's own partition-value unescaping — NOT URLDecoder, whose
-        // '+'-means-space rule corrupts keys containing '+' (Spark's
-        // escapePathName leaves '+' literal)
-        val key = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(partDir.getPath.getName.stripPrefix(s"$keyCol="))
-        val parts = fs.listStatus(partDir.getPath)
-          .filter(_.getPath.getName.endsWith(".csv"))
-          .map(_.getPath.toString).sorted.toSeq
-        (key, parts)
-      }
-    // non-default encoding or terminator ⇒ every key needs the
-    // (distributed) transcode pass; the metadata-only rename fast path
-    // is only byte-correct when staging bytes ARE the output bytes
-    val transcode = java.nio.charset.Charset.forName(encoding) !=
-      java.nio.charset.StandardCharsets.UTF_8 || lineSep != "\n"
-    val (renameable, needConcat) =
-      plan.partition { case (_, parts) =>
-        parts.length == 1 && prefix.isEmpty && !transcode }
-    renameable.foreach { case (key, parts) =>
-      val dest = new Path(s"$outDir/$key/$srcName.csv")
-      fs.mkdirs(dest.getParent)
-      if (fs.exists(dest)) fs.delete(dest, false)
-      if (!fs.rename(new Path(parts.head), dest))
-        throw new java.io.IOException(
-          s"fan-out finalize: rename ${parts.head} -> $dest failed")
-      dropCrcSidecar(fs, dest)
-    }
-    if (needConcat.nonEmpty) {
-      val serConf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-      val (out, src, pfx, enc, sep) = (outDir, srcName, prefix, encoding, lineSep)
-      val slices = math.min(needConcat.length, spark.sparkContext.defaultParallelism)
-      spark.sparkContext.parallelize(needConcat.toSeq, slices).foreach {
-        case (key, parts) => concatKey(serConf.value, out, src, pfx, enc, sep, key, parts)
-      }
-      // Sweep orphaned attempt temps (crashed or speculation-killed
-      // attempts that never renamed). Done HERE, after the job has
-      // returned and every key holds a committed dest — a task-side
-      // sweep could delete a live twin's tmp mid-write and leave the
-      // key fileless. Driver cost is metadata-only (one listing per
-      // concat key; no glob, so keys with glob metachars stay safe).
-      needConcat.foreach { case (key, _) =>
-        val dir = new Path(s"$outDir/$key")
-        fs.listStatus(dir)
-          .filter { st =>
-            val n = st.getPath.getName
-            n.contains(s"$srcName.csv.") &&
-              (n.endsWith(".tmp") || n.endsWith(".tmp.crc"))
-          }
-          .foreach(st => fs.delete(st.getPath, false))
-      }
-    }
-    fs.delete(new Path(staging), true)
-  }
-
-  /** Task-side concat of one key's part files (header kept once, prefix
-    * replayed). Runs on executors — keep driver state out of here.
-    *
-    * Retry-safe: each attempt writes to an attempt-unique hidden temp
-    * file and renames into place, so a retried or speculatively
-    * duplicated task never interleaves bytes with another attempt on the
-    * same destination stream — the last rename wins whole-file.
-    */
-  private def concatKey(
+  private def writeKeys(
       conf: org.apache.hadoop.conf.Configuration,
       outDir: String,
       srcName: String,
-      prefix: String,
+      head: String,
       encoding: String,
       lineSep: String,
-      key: String,
-      parts: Seq[String]): Unit = {
-    val cs = java.nio.charset.Charset.forName(encoding)
-    val stagingCs = java.nio.charset.StandardCharsets.UTF_8 // staging is UTF-8+LF
+      rows: Iterator[(String, String)]): Long = {
+    // the raw FS under LocalFileSystem: no .crc sidecar, and no forked
+    // chmod per create
+    val fs = new Path(outDir).getFileSystem(conf) match {
+      case local: LocalFileSystem => local.getRawFileSystem
+      case other => other
+    }
     // Strict transcode: the reference Python opens the sink with the
     // target codec and raises UnicodeEncodeError on any unmappable
     // character (fan_out_by_storeid.py's `open(..., encoding=enc)`
@@ -209,56 +158,47 @@ object FanOut {
     // REPLACEs with '?' — silent corruption. REPORT restores the loud
     // failure contract; the message carries the key so a 1000-task run
     // points at the offending partition, not a stack of anonymous bytes.
-    val strictEnc = cs.newEncoder()
-      .onMalformedInput(java.nio.charset.CodingErrorAction.REPORT)
-      .onUnmappableCharacter(java.nio.charset.CodingErrorAction.REPORT)
-    def encodeStrict(s: String): Array[Byte] =
+    val strictEnc = Charset.forName(encoding).newEncoder()
+      .onMalformedInput(CodingErrorAction.REPORT)
+      .onUnmappableCharacter(CodingErrorAction.REPORT)
+    def encodeStrict(key: String, s: String): Array[Byte] =
       try {
         val bb = strictEnc.encode(java.nio.CharBuffer.wrap(s))
         val arr = new Array[Byte](bb.remaining()); bb.get(arr); arr
       } catch {
-        case e: java.nio.charset.CharacterCodingException =>
+        case e: CharacterCodingException =>
           throw new java.io.IOException(
             s"fan-out: row for key '$key' contains characters not " +
               s"representable in $encoding (strict output-encoding, " +
               s"matching the reference's UnicodeEncodeError contract): " +
               s"${s.take(120)}", e)
       }
-    val dest = new Path(s"$outDir/$key/$srcName.csv")
-    val fs = dest.getFileSystem(conf)
+    val attempt = TaskContext.get().taskAttemptId()
+    val buffered = rows.buffered
+    var keys = 0L
+    while (buffered.hasNext) {
+      val key = buffered.head._1
+      keys += 1
+      val tmp = new Path(s"$outDir/_staging_$srcName/$attempt-$keys.tmp")
+      val out = fs.create(tmp, true)
+      try {
+        out.write(encodeStrict(key, head))
+        while (buffered.hasNext && buffered.head._1 == key)
+          out.write(encodeStrict(key, buffered.next()._2 + lineSep))
+      } finally out.close()
+      commit(fs, tmp, new Path(s"$outDir/$key/$srcName.csv"))
+    }
+    keys
+  }
+
+  /** Move a finished temp onto its destination. Rename FIRST; only
+    * delete a pre-existing dest when the rename refuses to clobber. A
+    * committed destination is therefore never removed before its
+    * replacement exists, so two live speculative/retried attempts can't
+    * strand the key fileless.
+    */
+  private def commit(fs: FileSystem, tmp: Path, dest: Path): Unit = {
     fs.mkdirs(dest.getParent)
-    val attempt = Option(org.apache.spark.TaskContext.get())
-      .map(_.taskAttemptId().toString)
-      .getOrElse(java.util.UUID.randomUUID().toString)
-    val tmp = new Path(dest.getParent, s".${dest.getName}.$attempt.tmp")
-    val out = fs.create(tmp, true)
-    try {
-      if (prefix.nonEmpty) out.write(encodeStrict(prefix))
-      var wroteHeader = false
-      parts.foreach { p =>
-        val in = fs.open(new Path(p))
-        try {
-          val reader = new java.io.BufferedReader(new java.io.InputStreamReader(in, stagingCs))
-          var line = reader.readLine() // header line of this part file
-          if (!wroteHeader && line != null) {
-            out.write(encodeStrict(line + lineSep))
-            wroteHeader = true
-          }
-          line = reader.readLine()
-          while (line != null) {
-            out.write(encodeStrict(line + lineSep))
-            line = reader.readLine()
-          }
-        } finally in.close()
-      }
-    } finally out.close()
-    // Commit by rename FIRST; only delete a pre-existing dest when the
-    // rename refuses to clobber. A committed destination is therefore
-    // never removed before its replacement exists, so two live
-    // speculative/retried attempts can't strand the key fileless (each
-    // attempt's tmp stays private to it — orphans from crashed attempts
-    // are swept by the driver in finalizeLayout AFTER the job, never by
-    // a peer task that might race a still-writing twin).
     if (!fs.rename(tmp, dest)) {
       if (fs.exists(dest)) fs.delete(dest, false)
       if (!fs.rename(tmp, dest)) {
@@ -267,20 +207,12 @@ object FanOut {
         // anything else is a real failure
         fs.delete(tmp, false)
         if (!fs.exists(dest))
-          throw new java.io.IOException(
-            s"fan-out concat: rename $tmp -> $dest failed")
+          throw new java.io.IOException(s"fan-out: rename $tmp -> $dest failed")
       }
     }
-    dropCrcSidecar(fs, dest)
-    dropCrcSidecar(fs, tmp)
-  }
-
-  /** Delete the local-FS checksum sidecar (`.{name}.crc`) so the layout
-    * is exactly the reference's plain `{key}/{src}.csv` files — a stale
-    * sidecar would also fail later Hadoop reads of an output a user
-    * edited in place. No-op on filesystems without sidecars (HDFS, S3).
-    */
-  private def dropCrcSidecar(fs: FileSystem, dest: Path): Unit = {
+    // a layout first written through the checksummed FS keeps a sidecar
+    // that no longer matches: drop it, so the layout is exactly the
+    // reference's plain files and later Hadoop reads don't fail on it
     val crc = new Path(dest.getParent, s".${dest.getName}.crc")
     if (fs.exists(crc)) fs.delete(crc, false)
   }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.etl.VerifyOps
@@ -100,9 +102,8 @@ class FanOutSpec extends SparkSpec {
 
   test("multi-part keys: distributed concat keeps one header and all rows") {
     val out = tmpDir("fanout_mp").toString
-    // 8 input partitions × 3 keys → several part files per key in staging;
-    // these take the distributed-concat path (with prefix, even the
-    // single-part keys do)
+    // 8 input partitions × 3 keys: every key's rows arrive from several
+    // input partitions and must still land in one file with one header
     val df = spark.range(600)
       .select(concat(lit("k"), pmod(col("id"), lit(3))).as(S),
         col("id").cast("string").as("v"))
@@ -119,12 +120,92 @@ class FanOutSpec extends SparkSpec {
     assert(back.count() == 600)
     assert(VerifyOps.contentViolations(back, S).count() == 0)
 
-    // no-prefix single-part path (rename): still a correct layout
+    // one input partition, no prefix: still a correct layout
     val out2 = tmpDir("fanout_rn").toString
     FanOut.write(df.coalesce(1), S, out2, "srcR")
     val back2 = FanOut.read(spark, out2, "srcR", S)
     assert(back2.count() == 600 &&
       VerifyOps.contentViolations(back2, S).count() == 0)
+  }
+
+  test("input order: each key's rows keep their input order across partitions") {
+    val out = tmpDir("fanout_order").toString
+    // 7 input partitions of 10 rows; values sort differently as strings
+    // ("10" < "2"), so only the input order reproduces the expected bytes
+    val df = spark.range(0, 70, 1, 7)
+      .select(concat(lit("k"), pmod(col("id"), lit(3))).as(S),
+        col("id").cast("string").as("v"))
+    FanOut.write(df, S, out, "srcO", prefixRows = Seq("Meta,1"), bom = true)
+    (0 to 2).foreach { k =>
+      val expected = ("\uFEFFMeta,1\n" + s"$S,v\n" +
+        (0 until 70).filter(_ % 3 == k).map(i => s"k$k,$i\n").mkString)
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      val got = Files.readAllBytes(java.nio.file.Paths.get(s"$out/k$k/srcO.csv"))
+      assert(java.util.Arrays.equals(got, expected), s"k$k:\n${new String(got, "UTF-8")}")
+    }
+  }
+
+  /** Every file and directory under `root`, relative, hidden ones included. */
+  private def listing(root: String): Set[String] = {
+    val r = java.nio.file.Paths.get(root)
+    val walk = Files.walk(r)
+    try walk.iterator().asScala.filter(_ != r).map(r.relativize(_).toString).toSet
+    finally walk.close()
+  }
+
+  test("nothing left behind: only {key}/{src}.csv under outDir") {
+    val out = tmpDir("fanout_clean").toString
+    val df = spark.range(0, 60, 1, 4)
+      .select(concat(lit("k"), pmod(col("id"), lit(3))).as(S),
+        col("id").cast("string").as("v"))
+    FanOut.write(df, S, out, "srcP", prefixRows = Seq("Meta,1"), bom = true)
+    FanOut.write(df, S, out, "srcQ")
+    val keys = Seq("k0", "k1", "k2")
+    assert(listing(out) == (keys ++ keys.flatMap(k => Seq(s"$k/srcP.csv", s"$k/srcQ.csv"))).toSet)
+  }
+
+  test("rewrite over a layout with a stale sidecar replaces every file whole") {
+    val out = tmpDir("fanout_rewrite").toString
+    val stale = "x" * 500 + "\n"
+    Seq("s1", "s2").foreach { k =>
+      Files.createDirectories(java.nio.file.Paths.get(s"$out/$k"))
+      Files.writeString(java.nio.file.Paths.get(s"$out/$k/src.csv"), stale)
+    }
+    Files.writeString(java.nio.file.Paths.get(s"$out/s1/.src.csv.crc"), "stale")
+    val df = Seq(("s1", "a"), ("s2", "b"), ("s1", "c")).toDF(S, "v")
+    FanOut.write(df, S, out, "src")
+    assert(Files.readString(java.nio.file.Paths.get(s"$out/s1/src.csv")) == s"$S,v\ns1,a\ns1,c\n")
+    assert(Files.readString(java.nio.file.Paths.get(s"$out/s2/src.csv")) == s"$S,v\ns2,b\n")
+    assert(listing(out) == Set("s1", "s2", "s1/src.csv", "s2/src.csv"))
+  }
+
+  test("header and rows match df.write.csv line for line: ',' and '\"' cells") {
+    val out = tmpDir("fanout_hdr").toString
+    val ref = tmpDir("fanout_hdr_ref").resolve("csv").toString
+    val df = Seq(("s1", "x,y", "say \"hi\"", null), ("s1", "", "plain", "z"))
+      .toDF(S, "a,b", "say \"c\"", "d\"e,f")
+    FanOut.write(df, S, out, "srcH")
+    df.coalesce(1).write.option("header", true).csv(ref)
+    val part = new java.io.File(ref).listFiles().filter(_.getName.endsWith(".csv")).head
+    assert(Files.readAllLines(java.nio.file.Paths.get(s"$out/s1/srcH.csv")) ==
+      Files.readAllLines(part.toPath))
+  }
+
+  test("a source column named _gk round-trips") {
+    val out = tmpDir("fanout_gk").toString
+    val df = Seq(("s1", "g1", "1"), ("s2", "g2", "2")).toDF(S, "_gk", "v")
+    FanOut.write(df, S, out, "srcG")
+    val back = FanOut.read(spark, out, "srcG", S)
+    assert(back.columns.toSeq == Seq(S, "_gk", "v", "_dir_key"))
+    assert(back.select(S, "_gk", "v").collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
+      .sorted.toSeq == Seq(("s1", "g1", "1"), ("s2", "g2", "2")))
+  }
+
+  test("returned key count equals the distinct trimmed keys") {
+    val out = tmpDir("fanout_count").toString
+    val df = Seq("s1", " s1 ", "s2", "  ", null, "s3 ", "s2").map(k => (k, "v"))
+      .toDF(S, "v").repartition(3)
+    assert(FanOut.write(df, S, out, "srcC") == 3L)
   }
 
   test("special-character keys round-trip: space, percent, plus, hash") {
